@@ -58,17 +58,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         return df.withColumn("ts", F.col("ts").cast(T.TimestampType()))
     return spark.read.parquet(table_path(sf_dir, name))
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names=TABLES) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in names}
-
-
-def register_views(spark: SparkSession, sf_dir: str, names=TABLES) -> None:
-    """Register each table as a temp view so queries can be written in SQL.
-
-    Catalyst produces the same plan for SQL and DataFrame declarations; we
-    use whichever reads better per operator.
-    """
-    for name in names:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -7,6 +7,11 @@ at /metrics via app/main.py:56-64):
 - ``successful_hyper_database_imports`` counter;
 - ``failed_hyper_database_imports`` counter.
 
+Beyond the reference, each sync stage's seconds are exposed as a summary
+(``duva_sync_stage_seconds_sum`` / ``_count`` per ``stage``), next to
+``duva_sync_schema_fallbacks_total``: syncs whose one-scan commit could
+not vouch for its sampled schema and re-ran the exact path.
+
 The exposition format is the published Prometheus text format
 (``# HELP`` / ``# TYPE`` / ``name value``), so a real Prometheus scrape
 of the control-plane server works unmodified. Spark's own executor/task
@@ -27,6 +32,10 @@ class _Metric:
     help: str
     kind: str  # "gauge" | "counter"
     value: float = 0.0
+
+
+#: `SyncJob.run` stages, in order; ``fallback`` is the exact-schema re-run.
+SYNC_STAGES = ("fetch", "sample", "commit", "swap", "fallback")
 
 
 @dataclass
@@ -51,7 +60,13 @@ class MetricsRegistry:
             "Number of failed imports to a hyper database",
             "counter",
         )
-        self._all = [self.in_progress, self.successful, self.failed]
+        self.schema_fallbacks = _Metric(
+            "duva_sync_schema_fallbacks_total",
+            "Syncs that re-ran the exact schema path after the sampled schema failed its check",
+            "counter",
+        )
+        self._all = [self.in_progress, self.successful, self.failed, self.schema_fallbacks]
+        self._stage_seconds = {stage: [0.0, 0] for stage in SYNC_STAGES}
 
     def inc(self, metric: _Metric, delta: float = 1.0) -> None:
         with self._mu:
@@ -72,6 +87,12 @@ class MetricsRegistry:
         else:
             self.inc(self.in_progress, -1)
             self.inc(self.successful, 1)
+
+    def observe_sync_stage(self, stage: str, seconds: float) -> None:
+        with self._mu:
+            agg = self._stage_seconds[stage]
+            agg[0] += seconds
+            agg[1] += 1
 
     # ---- HTTP request metrics (reference app/main.py:56-58 mounts
     # starlette_exporter's PrometheusMiddleware with prefix="duva",
@@ -117,6 +138,11 @@ class MetricsRegistry:
                 lines.append(f"# TYPE {m.name} {m.kind}")
                 v = int(m.value) if m.value == int(m.value) else m.value
                 lines.append(f"{m.name} {v}")
+            lines.append("# HELP duva_sync_stage_seconds Seconds spent in each sync stage")
+            lines.append("# TYPE duva_sync_stage_seconds summary")
+            for stage, (total, count) in self._stage_seconds.items():
+                lines.append(f'duva_sync_stage_seconds_sum{{stage="{stage}"}} {round(total, 6)}')
+                lines.append(f'duva_sync_stage_seconds_count{{stage="{stage}"}} {count}')
             if getattr(self, "_requests", None):
                 lines.append("# HELP duva_requests_total Total HTTP requests")
                 lines.append("# TYPE duva_requests_total counter")

@@ -1,29 +1,56 @@
 """The composite sync job: duva's EP2 data path around a SparkSession.
 
 Pipeline (reference: app/core/importer.py:126-225):
-  lock → status=syncing → fetch export (injectable) → distributed CSV
-  read with duva semantics → shaping transforms → full-refresh Parquet
-  write (row count reported) → status=file_available; any failure
-  increments the consecutive-failure counter and flips status, hitting
-  the ≥3 auto-deactivate cap.
+  lock → status=syncing → fetch export (injectable) → sampled CSV read
+  with duva semantics → shaping transforms → Parquet write to a staging
+  dir (row count reported) → swap into place → status=file_available;
+  any failure increments the consecutive-failure counter and flips
+  status, hitting the ≥3 auto-deactivate cap.
 
 What duva did in five materializations (CSV → pandas → rewritten CSV →
 Hyper COPY → S3 re-upload, importer.py:61-73/:251-255 +
-crud_hyperfile.py:64-82) is one Spark job here: scan → transform →
-committed Parquet write.
+crud_hyperfile.py:64-82) is one Spark job over the export here: scan →
+transform → Parquet write. The schema comes from Spark's inference over
+the export's first ``SAMPLE_ROWS`` lines (tiny jobs on a copy of them),
+and the same scan that writes checks it (`read_csv_sampled`). The
+staging dir replaces the live dataset only when that check passes; on
+an empty export the live dataset is never touched and ``EmptyInputError``
+is raised; when the check fails the staging dir is discarded and the
+exact path (`read_csv_duva`: whole-file inference, then the write) runs
+into it instead.
+
+The swap is a directory rename, so `out_path` must be a local filesystem
+path (or a ``file:`` URI).
 """
 
 from __future__ import annotations
 
+import shutil
+import time
 from collections.abc import Callable
+from contextlib import contextmanager, nullcontext
 from pathlib import Path
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 
 from duva_spark.orchestration.lock import DatasetLock, LockHeld
 from duva_spark.orchestration.state import FileStatus, MetadataStore
-from duva_spark.sinks import full_refresh
-from duva_spark.sources.csv_source import read_csv_duva
+from duva_spark.sinks import full_refresh, recover_swap, staging_path, swap_staged
+from duva_spark.sources.csv_source import read_csv_duva, read_csv_sampled
+
+
+def _local_path(out_path: str) -> str:
+    """`out_path` as a local filesystem path; raises for other schemes."""
+    url = urlparse(out_path)
+    if url.scheme == "file":
+        return url.path
+    if url.scheme:
+        raise ValueError(
+            f"sync out_path must be a local filesystem path, got {out_path!r}: "
+            "the commit swaps directories with os.rename"
+        )
+    return out_path
 
 
 class SyncJob:
@@ -40,17 +67,27 @@ class SyncJob:
         self.store = store
         self.lock_dir = lock_dir
         self.fetch = fetch  # dataset_id -> local CSV path (HTTP source, S3, ...)
+        # The commit scan checks the sampled schema, so `shape` must read
+        # every input row (no limit/sample).
         self.shape = shape or (lambda df: df)
         # duva_spark.metrics.MetricsRegistry when metric reporting is on
         # (the reference's gauge + success/failure counters, C7).
         self.metrics = metrics
 
+    @contextmanager
+    def _stage(self, name: str):
+        t0 = time.perf_counter()
+        try:
+            yield
+        finally:
+            if self.metrics:
+                self.metrics.observe_sync_stage(name, time.perf_counter() - t0)
+
     def run(self, dataset_id: str, out_path: str) -> int:
         """Run one sync; returns rows loaded. Raises on failure after
         recording it (caller decides on retry/cancel, as the reference's
         worker does)."""
-        from contextlib import nullcontext
-
+        out_path = _local_path(out_path)
         state = self.store.get(dataset_id)
         if not state.is_active:
             raise RuntimeError(f"dataset {dataset_id} is deactivated after repeated failures")
@@ -61,9 +98,10 @@ class SyncJob:
                 with self.metrics.track_sync() if self.metrics else nullcontext():
                     self.store.update_status(dataset_id, FileStatus.SYNCING)
                     try:
-                        csv_path = self.fetch(dataset_id)
-                        df = self.shape(read_csv_duva(self.spark, str(csv_path)))
-                        n = full_refresh(df, out_path)
+                        recover_swap(out_path)
+                        with self._stage("fetch"):
+                            csv_path = str(self.fetch(dataset_id))
+                        n = self._commit(csv_path, out_path)
                     except Exception as exc:
                         self.store.record_failure(dataset_id, repr(exc))
                         raise
@@ -72,4 +110,32 @@ class SyncJob:
         except LockHeld:
             # concurrent sync in flight — leave state untouched (the
             # reference returns 202 Already Syncing, file.py:163-201)
+            raise
+
+    def _commit(self, csv_path: str, out_path: str) -> int:
+        """Write the shaped export to the staging dir and swap it in; the
+        live dataset is replaced only after a verified write."""
+        staging = staging_path(out_path)
+        try:
+            with self._stage("sample"):
+                sampled = read_csv_sampled(self.spark, csv_path)
+            if sampled is not None:
+                with self._stage("commit"):
+                    n = full_refresh(self.shape(sampled.df), staging)
+                verdict = sampled.verdict()
+                if verdict == "ok":
+                    with self._stage("swap"):
+                        swap_staged(out_path)
+                    return n
+                shutil.rmtree(staging)
+                if verdict == "unverified" and self.metrics:
+                    self.metrics.inc(self.metrics.schema_fallbacks)
+            # The exact path: it raises EmptyInputError for empty input.
+            with self._stage("fallback"):
+                n = full_refresh(self.shape(read_csv_duva(self.spark, csv_path)), staging)
+            with self._stage("swap"):
+                swap_staged(out_path)
+            return n
+        except BaseException:
+            shutil.rmtree(staging, ignore_errors=True)
             raise

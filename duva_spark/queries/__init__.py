@@ -120,16 +120,6 @@ def exact_sum_round(col: Column, dp_in: int = 6, dp_out: int = 2) -> Column:
     )
 
 
-def exact_sum_round_sql(expr: str, dp_in: int = 6, dp_out: int = 2) -> str:
-    """DuckDB twin of :func:`exact_sum_round` — identical grid, HUGEINT
-    accumulation, integer-domain HALF_UP, one int→double divide."""
-    step = 10 ** (dp_in - dp_out)
-    return (
-        f"CAST((SUM(CAST(FLOOR(({expr}) * 1e{dp_in} + 0.5) AS HUGEINT))"
-        f" + {step // 2}) // {step} AS DOUBLE) / 1e{dp_out}"
-    )
-
-
 @dataclass(frozen=True)
 class Query:
     name: str

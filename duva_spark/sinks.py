@@ -49,7 +49,12 @@ def full_refresh(
     return int(obs.get["n_rows"])
 
 
-def _recover_rename_swap(path: str) -> None:
+def staging_path(path: str) -> str:
+    """Where a rename-swap commit writes before `swap_staged` moves it in."""
+    return f"{path}__staging"
+
+
+def recover_swap(path: str) -> None:
     """Make `path` consistent after a crash mid-swap: a leftover
     ``__staging`` is never authoritative (the swap hadn't started) and is
     discarded; a leftover ``__old`` with no live dataset means we crashed
@@ -57,7 +62,7 @@ def _recover_rename_swap(path: str) -> None:
     import os
     import shutil
 
-    staging, backup = f"{path}__staging", f"{path}__old"
+    staging, backup = staging_path(path), f"{path}__old"
     if os.path.exists(staging):
         shutil.rmtree(staging)
     if os.path.exists(backup):
@@ -67,18 +72,20 @@ def _recover_rename_swap(path: str) -> None:
             shutil.rmtree(backup)  # crash before the final cleanup
 
 
-def _rename_swap_upsert(spark, merged: DataFrame, path: str) -> int:
-    """Directory-rename commit: POSIX-atomic per rename, with entry-time
-    recovery so a valid dataset exists at `path` at every instant except
-    the sub-millisecond gap between the two renames (restored on next run
-    if a crash lands in it). Local-filesystem semantics — object stores
+def swap_staged(path: str) -> None:
+    """Directory-rename commit of ``staging_path(path)`` into `path`:
+    POSIX-atomic per rename, with `recover_swap` at the next entry so a
+    valid dataset exists at `path` at every instant except the
+    sub-millisecond gap between the two renames (restored on next run if
+    a crash lands in it). Local-filesystem semantics — object stores
     should use commit='pointer'."""
     import os
     import shutil
 
-    staging = f"{path}__staging"
-    n = full_refresh(merged, staging)
-    backup = f"{path}__old"
+    staging, backup = staging_path(path), f"{path}__old"
+    if not os.path.exists(path):
+        os.rename(staging, path)
+        return
     os.rename(path, backup)
     try:
         os.rename(staging, path)
@@ -86,7 +93,6 @@ def _rename_swap_upsert(spark, merged: DataFrame, path: str) -> int:
         os.rename(backup, path)  # put the old dataset back before failing
         raise
     shutil.rmtree(backup)
-    return n
 
 
 CURRENT_POINTER = "_CURRENT"
@@ -297,7 +303,7 @@ def merge_upsert(
             return _pointer_commit_upsert(spark, new_df, path, None, retain)
         existing = spark.read.parquet(current)
     else:
-        _recover_rename_swap(path)
+        recover_swap(path)
         if not os.path.exists(path):
             return full_refresh(new_df, path)
         existing = spark.read.parquet(path)
@@ -305,7 +311,9 @@ def merge_upsert(
     merged = keep.unionByName(new_df, allowMissingColumns=True)
     if commit == "pointer":
         return _pointer_commit_upsert(spark, merged, path, current, retain)
-    return _rename_swap_upsert(spark, merged, path)
+    n = full_refresh(merged, staging_path(path))
+    swap_staged(path)
+    return n
 
 
 def _retain_all(path: str, retain: int | None) -> int:

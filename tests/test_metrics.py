@@ -64,6 +64,33 @@ def test_metrics_count_success_and_failure(metered_api):
     assert m2["in_progress_hyper_import"] == 0  # gauge back down after both paths
 
 
+def test_sync_stage_seconds_and_schema_fallbacks(metered_api):
+    """One sync whose sampled schema holds, then one that must re-run the
+    exact path: every stage it ran is counted once, with its seconds."""
+    from duva_spark.metrics import SYNC_STAGES
+    from duva_spark.sources.csv_source import SAMPLE_ROWS
+
+    base, job, mode, tmp_path = metered_api
+    out = str(tmp_path / "out" / "d1")
+
+    def stages(m, suffix):
+        return {s: m[f'duva_sync_stage_seconds_{suffix}{{stage="{s}"}}'] for s in SYNC_STAGES}
+
+    job.run("d1", out)
+    m1 = _scrape(base)
+    assert stages(m1, "count") == {"fetch": 1, "sample": 1, "commit": 1, "swap": 1, "fallback": 0}
+    assert stages(m1, "sum")["commit"] > 0
+    assert m1["duva_sync_schema_fallbacks_total"] == 0
+    # ages are integers through the sample, then one is not
+    ages = [f"p{i},{i % 90}" for i in range(SAMPLE_ROWS)] + ["late,33.5"]
+    (tmp_path / "export.csv").write_text("name,age\n" + "\n".join(ages) + "\n")
+    assert job.run("d1", out) == SAMPLE_ROWS + 1
+    m2 = _scrape(base)
+    assert stages(m2, "count") == {"fetch": 2, "sample": 2, "commit": 2, "swap": 2, "fallback": 1}
+    assert stages(m2, "sum")["fallback"] > 0
+    assert m2["duva_sync_schema_fallbacks_total"] == 1
+
+
 def test_metrics_exposition_format(metered_api):
     base = metered_api[0]
     with urllib.request.urlopen(f"{base}/metrics") as resp:
@@ -72,6 +99,8 @@ def test_metrics_exposition_format(metered_api):
     assert "# TYPE in_progress_hyper_import gauge" in text
     assert "# TYPE successful_hyper_database_imports counter" in text
     assert "# TYPE failed_hyper_database_imports counter" in text
+    assert "# TYPE duva_sync_schema_fallbacks_total counter" in text
+    assert "# TYPE duva_sync_stage_seconds summary" in text
 
 
 def test_metrics_404_when_not_configured(spark, tmp_path):

@@ -81,6 +81,96 @@ def test_empty_export_records_failure(spark, tmp_path):
     assert store.get("d5").sync_failures == 1
 
 
+def _files(root) -> dict[str, bytes]:
+    from pathlib import Path
+
+    return {
+        str(f.relative_to(root)): f.read_bytes() for f in Path(root).rglob("*") if f.is_file()
+    }
+
+
+def _synced(spark, tmp_path, **kw):
+    """A store, a job over ``tmp_path / "export.csv"`` and a first commit."""
+    csv = tmp_path / "export.csv"
+    csv.write_text(CSV_OK)
+    store = _store(tmp_path)
+    job = SyncJob(spark, store, tmp_path, fetch=lambda _id: csv, **kw)
+    out = tmp_path / "out"
+    assert job.run("d", str(out)) == 2
+    return store, job, out, csv
+
+
+def test_failed_write_leaves_previous_commit_byte_identical(spark, tmp_path):
+    from pyspark.sql import functions as F
+
+    state = {"fail": False}
+
+    def shape(df):  # raises inside the write's tasks, not while planning
+        return df.withColumn("age", F.assert_true(F.col("age") < 0)) if state["fail"] else df
+
+    store, job, out, _ = _synced(spark, tmp_path, shape=shape)
+    before = _files(out)
+    state["fail"] = True
+    with pytest.raises(Exception, match="age"):
+        job.run("d", str(out))
+    assert _files(out) == before
+    assert not (tmp_path / "out__staging").exists()
+    assert store.get("d").sync_failures == 1
+
+
+def test_header_only_export_leaves_previous_commit_unchanged(spark, tmp_path):
+    from duva_spark.sources.csv_source import EmptyInputError
+
+    store, job, out, csv = _synced(spark, tmp_path)
+    before = _files(out)
+    csv.write_text("name,age\n")
+    with pytest.raises(EmptyInputError):
+        job.run("d", str(out))
+    assert _files(out) == before
+    assert not (tmp_path / "out__staging").exists()
+    assert store.get("d").sync_failures == 1
+
+
+@pytest.mark.parametrize("live", [False, True])
+def test_crash_leftovers_recovered_at_next_sync(spark, tmp_path, live):
+    """A crash between the swap's renames leaves ``__old`` and no live
+    dataset; one before the final cleanup leaves both. Either way, with a
+    half-written ``__staging`` too, the next sync commits cleanly."""
+    import os
+    import shutil
+
+    store, job, out, csv = _synced(spark, tmp_path)
+    if live:
+        shutil.copytree(out, f"{out}__old")
+    else:
+        os.rename(out, f"{out}__old")
+    os.makedirs(f"{out}__staging")
+    (tmp_path / "out__staging" / "part-junk").write_text("partial")
+    csv.write_text(CSV_OK + "carol,29\n")
+    assert job.run("d", str(out)) == 3
+    assert sorted(r.name for r in spark.read.parquet(str(out)).collect()) == ["alice", "bob", "carol"]
+    assert "part-junk" not in os.listdir(out)
+    assert not os.path.exists(f"{out}__old") and not os.path.exists(f"{out}__staging")
+
+
+def test_non_local_out_path_fails_before_anything_is_written(spark, tmp_path):
+    fetched = []
+    store = _store(tmp_path)
+    job = SyncJob(spark, store, tmp_path, fetch=fetched.append)
+    with pytest.raises(ValueError, match="local filesystem path"):
+        job.run("d", "s3a://bucket/datasets/d")
+    assert fetched == [] and not (tmp_path / "catalog.json").exists()
+    assert store.get("d").sync_failures == 0
+
+
+def test_file_uri_out_path_commits_locally(spark, tmp_path):
+    csv = tmp_path / "export.csv"
+    csv.write_text(CSV_OK)
+    job = SyncJob(spark, _store(tmp_path), tmp_path, fetch=lambda _id: csv)
+    assert job.run("d", (tmp_path / "out").as_uri()) == 2
+    assert spark.read.parquet(str(tmp_path / "out")).count() == 2
+
+
 def test_http_source_retry_and_poll():
     from duva_spark.sources.http import (
         FailedExternalRequest,

@@ -101,6 +101,123 @@ def test_full_refresh_overwrites_with_schema_drift(spark, tmp_path):
     assert back.count() == 1
 
 
+# ---- one-scan sync read: sample-seeded schema vs whole-file inference ----
+
+#: case -> (header, value of column x on sample lines, extra lines after
+#: the sample, whether the sync must fall back to the exact path)
+_SURPRISES = {
+    "padded_int": ("id,name,x", "7", ["1,n, 7"], True),
+    "plus_sign": ("id,name,x", "7", ["1,n,+7"], False),
+    "unicode_digits": ("id,name,x", "7", ["1,n,\u0661\u0662"], False),
+    "twenty_digits": ("id,name,x", "7", ["1,n,12345678901234567890"], True),
+    "exponent_after_ints": ("id,name,x", "7", ["1,n,1e5"], True),
+    "double_forms_after_doubles": (
+        "id,name,x",
+        "2.5",
+        [f"1,n,{v}" for v in ("1e5", "1d", "NaN", "Inf", "-Inf", "Infinity")],
+        False,
+    ),
+    "suffix_double_after_ints": ("id,name,x", "7", ["1,n,1d"], True),
+    "fraction_after_ints": ("id,name,x", "7", ["1,n,1.5"], True),
+    "text_after_doubles": ("id,name,x", "2.5", ["1,n,abc"], True),
+    "filled_after_null_sample": ("id,name,x", "", ["1,n,7"], True),
+    "null_throughout": ("id,name,x", "n/a", [], False),
+    "ragged_rows": ("id,name,x", "7", ["1,n", "1,n,7,extra"], True),
+    "header_row_repeated": ("id,name,x", "7", ["id,name,x"], True),
+    "duplicate_headers": ("id,x,x", "7", ["1,8,9"], False),
+    "reserved_marker_header": ("id,_duva_malformed,x", "7", ["1,m,8"], False),
+}
+
+
+def _rows(df) -> list[str]:
+    return sorted(repr(r) for r in df.collect())  # repr: NaN equals NaN
+
+
+def _corpus_csv(tmp_path, case: str) -> tuple[str, bool]:
+    """1,200 data lines: the sample's ``SAMPLE_ROWS`` lines, then the
+    case's surprise lines, padded with sample-like lines. Returns the
+    path and whether the sync must fall back."""
+    from duva_spark.sources.csv_source import SAMPLE_ROWS
+
+    p = tmp_path / f"{case}.csv"
+    if case in _SURPRISES:
+        header, x, extra, fallback = _SURPRISES[case]
+        lines = [f"{i},name{i},{x}" for i in range(SAMPLE_ROWS)] + extra
+        lines += [f"{i},name{i},{x}" for i in range(len(lines), 1200)]
+        p.write_text(f"{header}\n" + "\n".join(lines) + "\n", encoding="utf-8")
+        return str(p), fallback
+    body = [f"{i},name{i},{i * 0.5}" for i in range(1200)]
+    if case == "blank_head_lines":
+        p.write_text("\ufeff\n  \nid,name,x\n" + "\n".join(body[:500]) + "\n \n\n" + "\n".join(body[500:]) + "\n")
+        return str(p), False
+    if case == "cr_line_ends":
+        p.write_text("id,name,x\r" + "\r".join(body) + "\r", newline="")
+        return str(p), False
+    # header_in_null_sample: a repeat of the header line is the only value
+    # the sample holds; inference skips it, so both columns are null there
+    lines = [","] * 5 + ["a,b"] + [","] * SAMPLE_ROWS + ["1,2"] * 194
+    p.write_text("a,b\n" + "\n".join(lines) + "\n")
+    return str(p), True
+
+
+@pytest.mark.parametrize(
+    "case", sorted(_SURPRISES) + ["blank_head_lines", "cr_line_ends", "header_in_null_sample"]
+)
+def test_sync_commit_equals_exact_path(spark, tmp_path, case):
+    """The one-scan sync commits the schema and rows of the exact path
+    (whole-file inference), and falls back to it only where the sample's
+    candidate schema cannot be confirmed by the commit scan."""
+    from duva_spark.metrics import MetricsRegistry
+    from duva_spark.orchestration import MetadataStore, SyncJob
+
+    path, fallback = _corpus_csv(tmp_path, case)
+    reg = MetricsRegistry()
+    job = SyncJob(spark, MetadataStore(tmp_path / "c.json"), tmp_path, lambda _id: path, metrics=reg)
+    out = str(tmp_path / "out")
+    exact = read_csv_duva(spark, path)
+    assert job.run("d", out) == exact.count()
+    got = spark.read.parquet(out)
+    assert got.schema == exact.schema
+    assert _rows(got) == _rows(exact)
+    assert reg.schema_fallbacks.value == (1 if fallback else 0)
+
+
+def test_sampled_read_of_header_only_export_is_empty(spark, tmp_path):
+    from duva_spark.sources.csv_source import read_csv_sampled
+
+    p = tmp_path / "header.csv"
+    p.write_text("a,b\n")
+    sampled = read_csv_sampled(spark, str(p))
+    sampled.df.write.format("noop").mode("overwrite").save()
+    assert sampled.verdict() == "empty"
+    p.write_text("")
+    assert read_csv_sampled(spark, str(p)) is None
+
+
+def test_sampled_read_leaves_no_sample_file(spark, tmp_path, monkeypatch):
+    import tempfile
+
+    from duva_spark.sources.csv_source import read_csv_sampled
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    with pytest.raises(FileNotFoundError):
+        read_csv_sampled(spark, str(tmp_path / "missing.csv"))
+    path, _ = _corpus_csv(tmp_path, "plus_sign")
+    read_csv_sampled(spark, path)
+    assert sorted(p.name for p in tmp_path.iterdir()) == ["plus_sign.csv"]
+
+
+def test_sampled_read_checks_columns_the_shape_prunes(spark, tmp_path):
+    """A malformed value in a column the caller never selects still fails
+    the check: the observation keeps every column in the scan."""
+    from duva_spark.sources.csv_source import read_csv_sampled
+
+    path, _ = _corpus_csv(tmp_path, "text_after_doubles")
+    sampled = read_csv_sampled(spark, path)
+    sampled.df.select("id").write.format("noop").mode("overwrite").save()
+    assert sampled.verdict() == "unverified"
+
+
 def test_json_source_with_schema(spark, tmp_path):
     """JSON source (SURVEY §2b scans row): explicit schema, no inference."""
     p = tmp_path / "data.jsonl"
