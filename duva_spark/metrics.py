@@ -7,10 +7,11 @@ at /metrics via app/main.py:56-64):
 - ``successful_hyper_database_imports`` counter;
 - ``failed_hyper_database_imports`` counter.
 
-Beyond the reference, each sync stage's seconds are exposed as a summary
-(``duva_sync_stage_seconds_sum`` / ``_count`` per ``stage``), next to
-``duva_sync_schema_fallbacks_total``: syncs whose one-scan commit could
-not vouch for its sampled schema and re-ran the exact path.
+Beyond the reference, each completed sync stage's seconds are exposed as
+a summary (``duva_sync_stage_seconds_sum`` / ``_count`` per ``stage``),
+next to ``duva_sync_schema_fallbacks_total``: syncs of a non-empty export
+that took the exact path, because their one-scan commit could not vouch
+for its sampled schema or an earlier one of the same dataset could not.
 
 The exposition format is the published Prometheus text format
 (``# HELP`` / ``# TYPE`` / ``name value``), so a real Prometheus scrape
@@ -62,7 +63,7 @@ class MetricsRegistry:
         )
         self.schema_fallbacks = _Metric(
             "duva_sync_schema_fallbacks_total",
-            "Syncs that re-ran the exact schema path after the sampled schema failed its check",
+            "Syncs that took the exact schema path because a sampled schema failed its check",
             "counter",
         )
         self._all = [self.in_progress, self.successful, self.failed, self.schema_fallbacks]

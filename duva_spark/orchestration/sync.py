@@ -11,13 +11,16 @@ What duva did in five materializations (CSV → pandas → rewritten CSV →
 Hyper COPY → S3 re-upload, importer.py:61-73/:251-255 +
 crud_hyperfile.py:64-82) is one Spark job over the export here: scan →
 transform → Parquet write. The schema comes from Spark's inference over
-the export's first ``SAMPLE_ROWS`` lines (tiny jobs on a copy of them),
-and the same scan that writes checks it (`read_csv_sampled`). The
-staging dir replaces the live dataset only when that check passes; on
-an empty export the live dataset is never touched and ``EmptyInputError``
-is raised; when the check fails the staging dir is discarded and the
-exact path (`read_csv_duva`: whole-file inference, then the write) runs
-into it instead.
+the export's first ``SAMPLE_ROWS`` lines (three tiny jobs on a copy of
+them), and the same scan that writes checks it (`read_csv_sampled`). The
+staging dir replaces the live dataset only when that check passes; on an
+empty export the live dataset is never touched and ``EmptyInputError`` is
+raised. The scan stops at the first row that fails the check (a value
+the candidate type cannot convert, or one that may be a number in a
+column null throughout the sample); the staging dir is then discarded
+and the exact path (`read_csv_duva`: whole-file inference, an empty
+check, then the write) runs into it instead (stage ``fallback``). Later
+syncs of that dataset take the exact path directly.
 
 The swap is a directory rename, so `out_path` must be a local filesystem
 path (or a ``file:`` URI).
@@ -37,7 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from duva_spark.orchestration.lock import DatasetLock, LockHeld
 from duva_spark.orchestration.state import FileStatus, MetadataStore
 from duva_spark.sinks import full_refresh, recover_swap, staging_path, swap_staged
-from duva_spark.sources.csv_source import read_csv_duva, read_csv_sampled
+from duva_spark.sources.csv_source import read_csv_duva, read_csv_sampled, sample_mismatch
 
 
 def _local_path(out_path: str) -> str:
@@ -73,15 +76,20 @@ class SyncJob:
         # duva_spark.metrics.MetricsRegistry when metric reporting is on
         # (the reference's gauge + success/failure counters, C7).
         self.metrics = metrics
+        # Datasets whose sampled schema failed its check. A full refresh
+        # mostly re-sends the previous export plus new rows, so the next
+        # sync would fail the check again: they take the exact path for
+        # the life of this job. Runs of one dataset never overlap (the
+        # dataset lock), and set add/lookup are atomic.
+        self._exact_only: set[str] = set()
 
     @contextmanager
     def _stage(self, name: str):
+        """Time a stage; only one that completes is reported."""
         t0 = time.perf_counter()
-        try:
-            yield
-        finally:
-            if self.metrics:
-                self.metrics.observe_sync_stage(name, time.perf_counter() - t0)
+        yield
+        if self.metrics:
+            self.metrics.observe_sync_stage(name, time.perf_counter() - t0)
 
     def run(self, dataset_id: str, out_path: str) -> int:
         """Run one sync; returns rows loaded. Raises on failure after
@@ -101,7 +109,7 @@ class SyncJob:
                         recover_swap(out_path)
                         with self._stage("fetch"):
                             csv_path = str(self.fetch(dataset_id))
-                        n = self._commit(csv_path, out_path)
+                        n = self._commit(dataset_id, csv_path, out_path)
                     except Exception as exc:
                         self.store.record_failure(dataset_id, repr(exc))
                         raise
@@ -112,30 +120,43 @@ class SyncJob:
             # reference returns 202 Already Syncing, file.py:163-201)
             raise
 
-    def _commit(self, csv_path: str, out_path: str) -> int:
+    def _commit(self, dataset_id: str, csv_path: str, out_path: str) -> int:
         """Write the shaped export to the staging dir and swap it in; the
         live dataset is replaced only after a verified write."""
         staging = staging_path(out_path)
         try:
-            with self._stage("sample"):
-                sampled = read_csv_sampled(self.spark, csv_path)
-            if sampled is not None:
-                with self._stage("commit"):
-                    n = full_refresh(self.shape(sampled.df), staging)
-                verdict = sampled.verdict()
-                if verdict == "ok":
-                    with self._stage("swap"):
-                        swap_staged(out_path)
-                    return n
-                shutil.rmtree(staging)
-                if verdict == "unverified" and self.metrics:
+            n = None
+            if dataset_id not in self._exact_only:
+                n = self._sampled_commit(csv_path, staging)
+            if n is None:
+                # The exact path; it raises EmptyInputError for empty input.
+                with self._stage("fallback"):
+                    n = full_refresh(self.shape(read_csv_duva(self.spark, csv_path)), staging)
+                self._exact_only.add(dataset_id)
+                if self.metrics:
                     self.metrics.inc(self.metrics.schema_fallbacks)
-            # The exact path: it raises EmptyInputError for empty input.
-            with self._stage("fallback"):
-                n = full_refresh(self.shape(read_csv_duva(self.spark, csv_path)), staging)
             with self._stage("swap"):
                 swap_staged(out_path)
             return n
         except BaseException:
             shutil.rmtree(staging, ignore_errors=True)
             raise
+
+    def _sampled_commit(self, csv_path: str, staging: str) -> int | None:
+        """Commit with the sample's schema, checked by the commit scan;
+        None (and no staging dir) when the exact path must run instead."""
+        with self._stage("sample"):
+            read = read_csv_sampled(self.spark, csv_path)
+        if read is None:
+            return None
+        with self._stage("commit"):
+            try:
+                n = full_refresh(self.shape(read.df), staging)
+            except Exception as exc:
+                if not sample_mismatch(exc):
+                    raise
+                n = None
+        if n is not None and read.verdict() == "ok":
+            return n
+        shutil.rmtree(staging, ignore_errors=True)
+        return None

@@ -65,10 +65,12 @@ def test_metrics_count_success_and_failure(metered_api):
 
 
 def test_sync_stage_seconds_and_schema_fallbacks(metered_api):
-    """One sync whose sampled schema holds, then one that must re-run the
-    exact path: every stage it ran is counted once, with its seconds."""
+    """A sync whose sampled schema holds, one whose column first filled
+    after the sample is text, then one that must re-run the exact path:
+    every stage each ran is counted once, with its seconds; only the last
+    is a schema fallback. A header-only export is none."""
     from duva_spark.metrics import SYNC_STAGES
-    from duva_spark.sources.csv_source import SAMPLE_ROWS
+    from duva_spark.sources.csv_source import SAMPLE_ROWS, EmptyInputError
 
     base, job, mode, tmp_path = metered_api
     out = str(tmp_path / "out" / "d1")
@@ -76,19 +78,33 @@ def test_sync_stage_seconds_and_schema_fallbacks(metered_api):
     def stages(m, suffix):
         return {s: m[f'duva_sync_stage_seconds_{suffix}{{stage="{s}"}}'] for s in SYNC_STAGES}
 
+    def sync(lines):
+        (tmp_path / "export.csv").write_text("name,note\n" + "\n".join(lines) + "\n")
+        return job.run("d1", out)
+
+    once = {"fetch": 1, "sample": 1, "commit": 1, "swap": 1, "fallback": 0}
     job.run("d1", out)
     m1 = _scrape(base)
-    assert stages(m1, "count") == {"fetch": 1, "sample": 1, "commit": 1, "swap": 1, "fallback": 0}
+    assert stages(m1, "count") == once
     assert stages(m1, "sum")["commit"] > 0
     assert m1["duva_sync_schema_fallbacks_total"] == 0
-    # ages are integers through the sample, then one is not
-    ages = [f"p{i},{i % 90}" for i in range(SAMPLE_ROWS)] + ["late,33.5"]
-    (tmp_path / "export.csv").write_text("name,age\n" + "\n".join(ages) + "\n")
-    assert job.run("d1", out) == SAMPLE_ROWS + 1
+    # notes are empty through the sample, then text
+    assert sync([f"p{i}," for i in range(SAMPLE_ROWS)] + ["late,see visit 2"]) == SAMPLE_ROWS + 1
     m2 = _scrape(base)
-    assert stages(m2, "count") == {"fetch": 2, "sample": 2, "commit": 2, "swap": 2, "fallback": 1}
-    assert stages(m2, "sum")["fallback"] > 0
-    assert m2["duva_sync_schema_fallbacks_total"] == 1
+    assert stages(m2, "count") == {s: 2 * n for s, n in once.items()}
+    assert m2["duva_sync_schema_fallbacks_total"] == 0
+    # notes are integers through the sample, then one is not
+    assert sync([f"p{i},{i % 90}" for i in range(SAMPLE_ROWS)] + ["late,33.5"]) == SAMPLE_ROWS + 1
+    m3 = _scrape(base)
+    assert stages(m3, "count") == {s: 3 * n + (s == "fallback") for s, n in once.items()}
+    assert stages(m3, "sum")["fallback"] > 0
+    assert m3["duva_sync_schema_fallbacks_total"] == 1
+    # the exact path of a header-only export raises: no fallback is counted
+    with pytest.raises(EmptyInputError):
+        sync([])
+    m4 = _scrape(base)
+    assert stages(m4, "count")["fallback"] == 1
+    assert m4["duva_sync_schema_fallbacks_total"] == 1
 
 
 def test_metrics_exposition_format(metered_api):

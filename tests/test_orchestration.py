@@ -171,6 +171,39 @@ def test_file_uri_out_path_commits_locally(spark, tmp_path):
     assert spark.read.parquet(str(tmp_path / "out")).count() == 2
 
 
+def test_dataset_that_fell_back_takes_the_exact_path_next(spark, tmp_path):
+    """Once a dataset's sampled schema fails its check, its later syncs
+    skip the sample; other datasets and a new job still try it."""
+    from duva_spark.metrics import MetricsRegistry
+    from duva_spark.sources.csv_source import SAMPLE_ROWS
+
+    ages = [f"p{i},{i % 90}" for i in range(SAMPLE_ROWS)]
+    late = tmp_path / "late.csv"
+    late.write_text("name,age\n" + "\n".join(ages + ["late,33.5"]) + "\n")
+    clean = tmp_path / "clean.csv"
+    clean.write_text("name,age\n" + "\n".join(ages) + "\n")
+    exports = {"d": late, "e": clean}
+
+    def job():
+        reg = MetricsRegistry()
+        return SyncJob(spark, _store(tmp_path), tmp_path, exports.__getitem__, metrics=reg), reg
+
+    def runs(reg, stage):
+        return reg._stage_seconds[stage][1]
+
+    first, reg = job()
+    for _ in range(2):
+        assert first.run("d", str(tmp_path / "out_d")) == SAMPLE_ROWS + 1
+    assert (runs(reg, "sample"), runs(reg, "fallback")) == (1, 2)
+    assert reg.schema_fallbacks.value == 2
+    first.run("e", str(tmp_path / "out_e"))
+    assert (runs(reg, "sample"), runs(reg, "fallback")) == (2, 2)
+    second, reg = job()
+    second.run("d", str(tmp_path / "out_d"))
+    assert (runs(reg, "sample"), runs(reg, "fallback")) == (1, 1)
+    assert dict(spark.read.parquet(str(tmp_path / "out_d")).dtypes)["age"] == "double"
+
+
 def test_http_source_retry_and_poll():
     from duva_spark.sources.http import (
         FailedExternalRequest,

@@ -126,6 +126,15 @@ _SURPRISES = {
     "header_row_repeated": ("id,name,x", "7", ["id,name,x"], True),
     "duplicate_headers": ("id,x,x", "7", ["1,8,9"], False),
     "reserved_marker_header": ("id,_duva_malformed,x", "7", ["1,m,8"], False),
+    # columns null throughout the sample, then filled: no number parser
+    # takes these values, so the column stays TEXT in one scan
+    "late_words": ("id,name,x", "", ["1,n,seven", "2,n,Inf-ish", "3,n,7 kg"], False),
+    "late_dates": ("id,name,x", "", ["1,n,2024-01-01", "2,n,2024-01-02T10:00:00+03:00"], False),
+    # ... but these may be numbers, so the exact path decides
+    "late_fractions": ("id,name,x", "", ["1,n,1.5", "2,n, 2", "3,n,NaN"], True),
+    "late_words_then_number": ("id,name,x", "", ["1,n,seven", "2,n,7"], True),
+    "late_thousands": ("id,name,x", "", ['1,n,"1,000"'], True),
+    "late_hex_double": ("id,name,x", "", ["1,n,0x1p3"], True),
 }
 
 
@@ -153,6 +162,19 @@ def _corpus_csv(tmp_path, case: str) -> tuple[str, bool]:
     if case == "cr_line_ends":
         p.write_text("id,name,x\r" + "\r".join(body) + "\r", newline="")
         return str(p), False
+    if case == "cr_line_ends_over_1mib":
+        body = [f"{i},{'n' * 1000}{i},{i * 0.5}" for i in range(1200)]
+        p.write_text("id,name,x\r" + "\r".join(body) + "\r", newline="")
+        assert p.stat().st_size > 1 << 20
+        return str(p), False
+    if case == "crlf_torn_between_blocks":
+        # the \r of the first data line is the last byte of the sample
+        # reader's first 64 KiB block, its \n the first of the next
+        head = "id,name,x\r\n0,"
+        first = head + "n" * ((1 << 16) - 1 - len(head) - len(",0.0")) + ",0.0\r\n"
+        assert first.index("\r", len(head)) == (1 << 16) - 1
+        p.write_text(first + "\r\n".join(body[1:]) + "\r\n", newline="")
+        return str(p), False
     # header_in_null_sample: a repeat of the header line is the only value
     # the sample holds; inference skips it, so both columns are null there
     lines = [","] * 5 + ["a,b"] + [","] * SAMPLE_ROWS + ["1,2"] * 194
@@ -161,7 +183,15 @@ def _corpus_csv(tmp_path, case: str) -> tuple[str, bool]:
 
 
 @pytest.mark.parametrize(
-    "case", sorted(_SURPRISES) + ["blank_head_lines", "cr_line_ends", "header_in_null_sample"]
+    "case",
+    sorted(_SURPRISES)
+    + [
+        "blank_head_lines",
+        "cr_line_ends",
+        "cr_line_ends_over_1mib",
+        "crlf_torn_between_blocks",
+        "header_in_null_sample",
+    ],
 )
 def test_sync_commit_equals_exact_path(spark, tmp_path, case):
     """The one-scan sync commits the schema and rows of the exact path
@@ -194,12 +224,10 @@ def test_sampled_read_of_header_only_export_is_empty(spark, tmp_path):
     assert read_csv_sampled(spark, str(p)) is None
 
 
-def test_sampled_read_leaves_no_sample_file(spark, tmp_path, monkeypatch):
-    import tempfile
-
+def test_sampled_read_leaves_no_sample_file(spark, tmp_path):
+    """The sample is copied next to the export and removed after use."""
     from duva_spark.sources.csv_source import read_csv_sampled
 
-    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     with pytest.raises(FileNotFoundError):
         read_csv_sampled(spark, str(tmp_path / "missing.csv"))
     path, _ = _corpus_csv(tmp_path, "plus_sign")
@@ -209,13 +237,14 @@ def test_sampled_read_leaves_no_sample_file(spark, tmp_path, monkeypatch):
 
 def test_sampled_read_checks_columns_the_shape_prunes(spark, tmp_path):
     """A malformed value in a column the caller never selects still fails
-    the check: the observation keeps every column in the scan."""
-    from duva_spark.sources.csv_source import read_csv_sampled
+    the scan: the observation keeps every column in it."""
+    from duva_spark.sources.csv_source import read_csv_sampled, sample_mismatch
 
     path, _ = _corpus_csv(tmp_path, "text_after_doubles")
     sampled = read_csv_sampled(spark, path)
-    sampled.df.select("id").write.format("noop").mode("overwrite").save()
-    assert sampled.verdict() == "unverified"
+    with pytest.raises(Exception) as failed:
+        sampled.df.select("id").write.format("noop").mode("overwrite").save()
+    assert sample_mismatch(failed.value)
 
 
 def test_json_source_with_schema(spark, tmp_path):
