@@ -6,7 +6,8 @@ payload forward with last(..., ignoreNulls). One shuffle total, linear
 in |L|+|R| — unlike a range-join formulation, which degenerates to
 O(|L|·|R|) per hot key. Right rows sort before left rows at equal
 timestamps, giving inclusive (ts_left >= ts_right) as-of semantics,
-matching DuckDB's ASOF JOIN.
+matching DuckDB's ASOF JOIN. Right rows that tie on (key, time) are
+ordered by their payload, so the match does not depend on the shuffle.
 """
 
 from __future__ import annotations
@@ -47,17 +48,18 @@ def asof_join(
         F.lit(None).cast(l_tag.schema["_lrow"].dataType).alias("_lrow"),
         *[F.col(c).alias(f"_r_{c}") for c in payload_cols],
     )
+    ties = [F.asc(f"_r_{c}") for c in payload_cols]
     if direction == "backward":
         w = (
             W.partitionBy(on)
-            .orderBy(F.asc("_ts"), F.asc("_side"))
+            .orderBy(F.asc("_ts"), F.asc("_side"), *ties)
             .rowsBetween(W.unboundedPreceding, W.currentRow)
         )
         fill = F.last
     else:
         w = (
             W.partitionBy(on)
-            .orderBy(F.asc("_ts"), F.desc("_side"))
+            .orderBy(F.asc("_ts"), F.desc("_side"), *ties)
             .rowsBetween(W.currentRow, W.unboundedFollowing)
         )
         fill = F.first

@@ -24,6 +24,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from duva_spark.catalog import NANOS_AS_LONG
+
 
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
@@ -42,7 +44,8 @@ def get_spark(app_name: str = "duva_spark", extra_conf: dict | None = None) -> S
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
-        .config("spark.sql.python.filterPushdown.enabled", "true")
+        # events.ts on disk may be TIMESTAMP(NANOS); see catalog.events_ts
+        .config(NANOS_AS_LONG, "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
     )

@@ -10,13 +10,18 @@ Reproduces the reference's fetch protocol shape (app/core/onadata.py):
 Spark-first split: the *fetch* is driver-side (a control-plane concern;
 at scale the export lands on object storage and executors read it
 directly), the *parse* is the distributed CSV read in csv_source. The
-HTTP client is injectable so tests run without a network.
+HTTP client defaults to urllib and is injectable so tests run without a
+network: ``fetch_to_local(poll_async_export(export_url))`` is the real
+OnaData fetch.
 """
 
 from __future__ import annotations
 
+import json
 import tempfile
 import time
+import urllib.error
+import urllib.request
 from collections.abc import Callable
 from pathlib import Path
 
@@ -30,16 +35,34 @@ class FailedExternalRequest(RuntimeError):
     app/core/onadata.py:137-144)."""
 
 
+def _http_bytes(url: str) -> tuple[int, bytes]:
+    try:
+        with urllib.request.urlopen(url) as resp:
+            return resp.status, resp.read()
+    except urllib.error.HTTPError as e:
+        return e.code, b""
+    except urllib.error.URLError:
+        # network-level failure (refused/DNS): surface as a retryable
+        # status so fetch_to_local's backoff loop owns it (S3 policy)
+        return 503, b""
+
+
+def _http_json(url: str) -> tuple[int, dict]:
+    status, body = _http_bytes(url)
+    return status, json.loads(body) if body else {}
+
+
 def fetch_to_local(
     url: str,
-    getter: Callable[[str], tuple[int, bytes]],
+    getter: Callable[[str], tuple[int, bytes]] = _http_bytes,
     retries: int = DEFAULT_RETRIES,
     sleep: Callable[[float], None] = time.sleep,
     backoff: float = 1.1,
 ) -> Path:
     """Stream `url` to a local temp file with duva's retry policy.
 
-    `getter(url) -> (status_code, body)` abstracts the HTTP client.
+    `getter(url) -> (status_code, body)` abstracts the HTTP client
+    (urllib by default).
     """
     last_status = None
     for attempt in range(retries + 1):
@@ -59,7 +82,7 @@ def fetch_to_local(
 
 def poll_async_export(
     start_url: str,
-    getter: Callable[[str], tuple[int, dict]],
+    getter: Callable[[str], tuple[int, dict]] = _http_json,
     max_polls: int = 3,
     sleep: Callable[[float], None] = time.sleep,
 ) -> str:

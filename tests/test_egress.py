@@ -3,6 +3,8 @@ dependencies absent by design)."""
 
 from __future__ import annotations
 
+import importlib.util
+
 import pytest
 
 from duva_spark.egress import (
@@ -66,3 +68,15 @@ def test_missing_tableau_raises_cleanly():
 
     with pytest.raises(ImportError, match="tableauserverclient"):
         publish_to_tableau("x.hyper", "https://t", "site", "tok", "val", "proj")
+
+
+@pytest.mark.skipif(
+    importlib.util.find_spec("tableauhyperapi") is not None,
+    reason="tableauhyperapi is installed",
+)
+def test_missing_hyperapi_raises_cleanly(tmp_path):
+    from duva_spark.egress import export_hyper
+
+    with pytest.raises(ImportError, match="tableauhyperapi not installed"):
+        export_hyper(None, str(tmp_path / "x.hyper"))
+    assert not (tmp_path / "x.hyper").exists()

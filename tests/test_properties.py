@@ -55,6 +55,33 @@ def test_asof_join_matches_pandas_merge_asof(spark):
     )
 
 
+@pytest.mark.parametrize("direction", ["backward", "forward"])
+def test_asof_join_ties_resolved_by_payload(spark, direction):
+    """Right rows that share (key, time) are ordered by their payload:
+    backward takes the largest, forward the smallest, and the answer is
+    the same at 1 and 8 shuffle partitions. The rows are listed so that
+    arrival order alone would pick a different one."""
+    right = [(k, t, v) for k in range(3) for t in (10, 20) for v in (9, 1, 5)]
+    left = [(k, t, k * 100 + t) for k in range(3) for t in (5, 10, 15, 20, 25)]
+    pick = max if direction == "backward" else min
+    want = {}
+    for k, lt, lid in left:
+        # backward: right t <= lt; forward: right t >= lt
+        hits = [t for rk, t, _ in right if rk == k and pick(t, lt) == lt]
+        want[lid] = pick(v for rk, t, v in right if rk == k and t == pick(hits)) if hits else None
+
+    sl = spark.createDataFrame(left, "k long, t long, lid long")
+    sr = spark.createDataFrame(right, "k long, t long, v long").repartition(3)
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        for parts in ("1", "8"):
+            spark.conf.set("spark.sql.shuffle.partitions", parts)
+            got = asof_join(sl, sr, on="k", ts="t", payload_cols=["v"], direction=direction)
+            assert {r.lid: r.asof_v for r in got.collect()} == want, parts
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+
+
 def test_split_unsplit_roundtrip_random(spark):
     choices = ["a", "b", "c", "d"]
     rows = []

@@ -22,6 +22,36 @@ def _batch_events(spark, sf_dir):
     return load_table(spark, sf_dir, "events")
 
 
+@pytest.mark.parametrize("unit", ["ns", "us"])
+def test_events_ts_generations_load_as_the_same_instants(spark, tmp_path, unit):
+    """Both on-disk generations of events.ts, TIMESTAMP(NANOS) and
+    TIMESTAMP(MICROS) without a zone, load as the same UTC instants in
+    the batch and the stream read, also on a session that never set
+    nanosAsLong (one not built by get_spark)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from duva_spark.catalog import NANOS_AS_LONG
+
+    micros = [1_704_067_200_123_456, 1_719_791_999_000_000]  # 2024-01-01, 2024-06-30 UTC
+    ts = pa.array(micros, pa.timestamp("us")).cast(pa.timestamp(unit))
+    pq.write_table(
+        pa.table({"event_id": pa.array([1, 2], pa.int64()), "ts": ts}),
+        tmp_path / "events.parquet",
+    )
+    spark.conf.unset(NANOS_AS_LONG)
+    try:
+        batch = load_table(spark, str(tmp_path), "events")
+        stream = run_available_now(
+            read_events_stream(spark, str(tmp_path)), "ts_generations", "append"
+        )
+        for df in (batch, stream):
+            assert df.schema["ts"].dataType.simpleString() == "timestamp"
+            assert sorted(r[0] for r in df.select(F.unix_micros("ts")).collect()) == micros
+    finally:
+        spark.conf.set(NANOS_AS_LONG, "true")
+
+
 def test_tumbling_stream_equals_batch(spark, sf_dir):
     stream = read_events_stream(spark, sf_dir, watermark="1 hour")
     result = run_available_now(tumbling_window_agg(stream, "1 day"), "t_tumble")
@@ -474,18 +504,15 @@ def test_stream_quality_filter_matches_batch_scoring(spark, sf_dir):
     assert sum(k for _, k, _ in got.values()) < sum(totals.values())
 
 
-def test_checkpoint_fastpath_scheme_detection(spark, monkeypatch):
+def test_checkpoint_fastpath_scheme_detection(spark):
     """The local checkpoint fastpath must engage only for file-scheme
     checkpoint roots (r12 verdict item 7): an hdfs://-style location
-    keeps Spark's default manager + checksums, a local path (or the
-    temp-dir fallback) switches to the fork-free local managers, and
-    the env var still forces either polarity."""
+    keeps Spark's default manager + checksums, and a local path (or the
+    temp-dir fallback) switches to the fork-free local managers."""
     from duva_spark.streaming import jobs
 
     mgr_key = "spark.sql.streaming.checkpointFileManagerClass"
     sum_key = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_CKPT_FASTPATH", raising=False)
-
     jobs._local_checkpoint_fastpath(spark, "hdfs://nn:8020/ckpt/q1")
     assert spark.conf.get(mgr_key, None) is None  # Spark defaults kept
 
@@ -493,21 +520,14 @@ def test_checkpoint_fastpath_scheme_detection(spark, monkeypatch):
     assert "FileSystemBasedCheckpointFileManager" in spark.conf.get(mgr_key)
     assert spark.conf.get(sum_key) == "false"
 
+    # a remote stream on the shared session drops what a local one set
+    jobs._local_checkpoint_fastpath(spark, "s3a://bucket/ckpt")
+    assert spark.conf.get(mgr_key, None) is None
+
     jobs._local_checkpoint_fastpath(spark, "file:///tmp/ckpt/q1")
     assert "FileSystemBasedCheckpointFileManager" in spark.conf.get(mgr_key)
 
-    # no explicit location and no session default -> temp-dir fallback
+    # no explicit location and no session default -> temp-dir fallback,
+    # which also leaves the session in the local-default state
     jobs._local_checkpoint_fastpath(spark, None)
     assert "FileSystemBasedCheckpointFileManager" in spark.conf.get(mgr_key)
-
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_CKPT_FASTPATH", "0")
-    jobs._local_checkpoint_fastpath(spark, "/tmp/ckpt/q1")
-    assert spark.conf.get(mgr_key, None) is None
-
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_CKPT_FASTPATH", "1")
-    jobs._local_checkpoint_fastpath(spark, "s3a://bucket/ckpt")
-    assert "FileSystemBasedCheckpointFileManager" in spark.conf.get(mgr_key)
-
-    # leave the session in the local-default state for later tests
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_CKPT_FASTPATH", raising=False)
-    jobs._local_checkpoint_fastpath(spark, None)
